@@ -674,7 +674,16 @@ def temperature_plan_cte(src: str, key: str, count_alias: str, d: int) -> str:
     sample_temperature_draw oracle and the pipeline oracle so the plan
     arithmetic can never drift between them (r10 review). Portability
     discipline per resample_temperature: IEEE-exact sqrt weights, an
-    ORDERED running sum for the total, int64 after the FLOOR."""
+    ORDERED running sum for the total, int64 after the FLOOR.
+
+    The threshold comes from the UNROUNDED rate ``total_n / (W·√n)``
+    (W = the weight total), not from the floored target: flooring the
+    target first made the rate non-monotone in key size (counts
+    [46, 43, 41, 1, 40] kept the 41-doc key at a lower rate than the
+    40-doc key). The quotient is monotone under IEEE rounding; a key
+    whose target reaches its count keeps all (threshold == D), which
+    the rate alone can miss by one ulp (√n·√n ≠ n). target_docs keeps
+    the floor, so the targets never sum past the total."""
     return f"""tn AS (
   SELECT {key} AS k, COUNT(*) AS n FROM {src} GROUP BY {key}
 ), tw AS (
@@ -684,15 +693,24 @@ def temperature_plan_cte(src: str, key: str, count_alias: str, d: int) -> str:
          SUM(n) OVER () AS total_n
   FROM tn
 ), tplan AS (
-  SELECT k, n,
+  SELECT k, n, wt, total_n, MAX(cum_wt) OVER () AS tot_wt,
          CAST(FLOOR(total_n * wt / MAX(cum_wt) OVER ()) AS BIGINT)
            AS target_docs
   FROM tw
 ), thr AS (
   SELECT k AS {key}, n AS {count_alias}, target_docs,
-         LEAST({d}, target_docs * {d} // n) AS threshold
+         {_temperature_threshold_sql(d)} AS threshold
   FROM tplan
 )"""
+
+
+def _temperature_threshold_sql(d: int) -> str:
+    """The draw threshold shared by both engines' plans (see
+    temperature_plan_cte); columns n, wt, total_n, tot_wt, target_docs."""
+    return (
+        f"CASE WHEN target_docs >= n THEN {d} ELSE LEAST({d}, "
+        f"CAST(FLOOR({d} * total_n / (tot_wt * wt)) AS BIGINT)) END"
+    )
 
 
 def temperature_plan_df(
@@ -716,6 +734,9 @@ def temperature_plan_df(
     return w.select(
         key,
         "n",
+        "wt",
+        "total_n",
+        F.expr("MAX(cum_wt) OVER ()").alias("tot_wt"),
         F.expr(
             "CAST(FLOOR(total_n * wt / (MAX(cum_wt) OVER ())) AS BIGINT)"
         ).alias("target_docs"),
@@ -723,7 +744,7 @@ def temperature_plan_df(
         key,
         f"n AS {count_alias}",
         "target_docs",
-        f"LEAST({d}, target_docs * {d} DIV n) AS threshold",
+        f"{_temperature_threshold_sql(d)} AS threshold",
     )
 
 
@@ -783,14 +804,15 @@ def sample_temperature_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
     to an exact per-document draw. Each language's keep probability is
     its planned rate as an integer threshold,
 
-        threshold = min(D, target_docs · D  div  n_docs),  D = 10⁶
+        threshold = min(D, floor(D · total / (W · √n_docs))),  D = 10⁶
         keep(d)   = sha32('tmix:' || doc_id) mod D  <  threshold
 
-    so the draw is a pure-integer Bernoulli — no float ever enters the
-    keep decision, and both engines agree bit-for-bit. A language whose
-    target EXCEEDS its count (upsampled low-resource tail) clamps to
-    keep-all here; the repetition factor beyond 1.0 is a downstream
-    pack/repeat concern (pack_sequences), not a keep/drop draw.
+    (W = Σ√n over languages), so the draw is a pure-integer Bernoulli —
+    no float enters the keep decision, and both engines agree
+    bit-for-bit. A language whose target REACHES its count (upsampled
+    low-resource tail) clamps to keep-all here; the repetition factor
+    beyond 1.0 is a downstream pack/repeat concern (pack_sequences),
+    not a keep/drop draw.
 
     The plan arithmetic reuses resample_temperature's portability
     discipline: IEEE-exact sqrt weights and an ORDERED running sum so

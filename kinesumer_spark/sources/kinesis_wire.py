@@ -23,12 +23,16 @@ The feed is DETERMINISTIC from (shard, offset) — same scheme as the
 reconstructs every delivered record from ``range()`` and the driver
 hash-checks exactly-once delivery through the real protocol stack.
 
-Scale notes: one planner partition per shard per microbatch (the
-reference's range-split assignment); the driver holds only the
-per-shard sequence cursor (the ShardCheckPoint row set) and a
-scanLimit-paced tip probe; record payloads flow through executors
-only. On a real deployment the same consumer code points at the AWS
-endpoint — the fake is configuration, not architecture.
+Scale notes: in polling mode the planner's scanLimit-paced tip probe
+IS the read — each record crosses the wire once, on the driver, and
+reaches the JVM as one Arrow batch per microbatch (Spark's simple
+stream reader protocol); the driver holds the per-shard sequence
+cursor (the ShardCheckPoint row set) plus the records of batches not
+yet committed. EFO mode reads on executors, one partition per shard
+range; the replay of an uncommitted batch after a restart re-reads
+its logged range in one executor task. On a real deployment the same
+consumer code points at the AWS endpoint — the fake is configuration,
+not architecture.
 """
 
 from __future__ import annotations
@@ -40,11 +44,13 @@ import threading
 import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
+    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -1067,15 +1073,24 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
     """Per-shard offset map (the ShardCheckPoint row set) with
     GetRecords-paced advancement, all state JSON-picklable: boto3
     clients are created lazily per use and NEVER stored on self (the
-    reader is serialized to executors for read())."""
+    reader is serialized to executors for read()).
+
+    Who reads what: in polling mode the driver's tip probe fetches each
+    record once and keeps it as the batch's data (served through
+    ``KinesumerWirePollingReader``); executors read only to replay a
+    WAL-logged batch whose prefetched records are gone (a restart).
+    In EFO mode Spark drives this class directly: the probe only paces
+    the batch boundary and executors read the committed range through
+    SubscribeToShard."""
 
     def __init__(self, schema: StructType, options: dict) -> None:
         self.endpoint = options["endpoint"]
         self.stream = options.get("stream", "wire")
         self.scan_limit = int(options.get("scanlimit", 25))
-        # mode=efo switches the EXECUTOR data path to SubscribeToShard
-        # push events (O2); the planner's tip probe stays a polling scan
-        # either way (pacing is admission control, not the data path)
+        # mode=polling (default): the planner's tip probe is the read,
+        # once, on the driver. mode=efo: the probe only paces the batch
+        # boundary (admission control) and executors read the committed
+        # range as SubscribeToShard push events (O2)
         self.mode = options.get("mode", "polling")
         self.consumer_arn = options.get("consumerarn", "")
         # lineagegate=true adds the reshard admission rule the reference
@@ -1186,14 +1201,26 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
                 self._cursor[sid] = s
 
     def latestOffset(self) -> dict:
-        # the tip probe IS a GetRecords scan (there is no "what's the
-        # tip" API in Kinesis — consumers discover it by reading): each
-        # call advances every shard by ≤ scanLimit records, exactly the
-        # reference's paced loop. Record payloads are re-fetched by the
-        # executors for the committed range — Kinesis reads are
-        # replayable by design, which is what makes the planner/executor
-        # split safe.
-        #
+        return self.advance()
+
+    def advance(
+        self, start: dict | None = None, keep: list | None = None
+    ) -> dict:
+        """One planning round; returns the new per-shard cursor.
+
+        ``start`` sets the cursor the round probes from (the simple
+        reader protocol hands Spark's offset in; None continues from
+        the reader's own cursor).
+
+        The tip probe IS a GetRecords scan (there is no "what's the tip"
+        API in Kinesis — consumers discover it by reading): each round
+        advances every shard by ≤ scanLimit records, exactly the
+        reference's paced loop. With ``keep`` the round's records are
+        appended to it as rows — polling mode's whole data path, each
+        record fetched once. Without it (EFO) the records are dropped
+        and executors fetch the committed range; Kinesis reads are
+        replayable by design, which is also what lets a restart replay
+        a WAL-logged batch on executors."""
         # A stream that went non-ACTIVE (ResourceInUseException — e.g.
         # DELETING under the consumer) is FROZEN, not fatal: the
         # reference exits that stream's consume loop and the client
@@ -1204,6 +1231,8 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
         # design, like the reference's loop exit. The guard covers the
         # FIRST probe too (initialOffset's ListShards can be the call
         # that discovers the deletion).
+        if start is not None:
+            self._cursor = dict(start)
         if getattr(self, "_stream_dead", False):
             return dict(getattr(self, "_cursor", {}))
         from botocore.exceptions import ClientError
@@ -1216,18 +1245,21 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
                 # through partitions() before the first plan)
                 self._heal_cursor_from_wal()
             before = dict(self._cursor)
-            return self._probe_tips()
+            return self._probe_tips(keep)
         except ClientError as e:
             if e.response["Error"]["Code"] != "ResourceInUseException":
                 raise
             self._stream_dead = True
             # deletion can land MID-probe-round: shards probed before
             # the fault already advanced the cursor, but committing
-            # those ranges would schedule executor reads against a
-            # data plane that is gone. Freeze at the PRE-round
-            # snapshot — advancement was driver-only state, so nothing
-            # delivered is lost and nothing undeliverable is promised.
+            # those ranges would promise records the round never
+            # finished collecting (or, in EFO, schedule executor reads
+            # against a data plane that is gone). Freeze at the
+            # PRE-round snapshot and drop the partial round's rows —
+            # nothing delivered is lost, nothing undeliverable promised.
             self._cursor = before if before is not None else {}
+            if keep is not None:
+                keep.clear()
             return dict(self._cursor)
 
     def _state_store(self):
@@ -1296,7 +1328,19 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
             drained.add(parent_id)
         return ok
 
-    def _probe_tips(self) -> dict:
+    def _row(self, shard_id: str, rec: dict) -> tuple:
+        # Data is the raw payload blob; the consumer decodes it
+        # schema-on-read, as the reference's application does
+        payload = json.loads(bytes(rec["Data"]).decode())
+        return (
+            self.stream,
+            shard_id,
+            rec["SequenceNumber"],
+            rec["PartitionKey"],
+            int(payload["k"]),
+        )
+
+    def _probe_tips(self, keep: list | None = None) -> dict:
         client = wire_client(self.endpoint)
         # Every planning round re-lists the topology — the reference's
         # syncShardInfo sweep (syncclient.go): shards born from a LIVE
@@ -1390,6 +1434,8 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
                         raise
             if out["Records"]:
                 self._cursor[shard_id] = out["Records"][-1]["SequenceNumber"]
+                if keep is not None:
+                    keep.extend(self._row(shard_id, r) for r in out["Records"])
             if out.get("NextShardIterator") is None and not out["Records"]:
                 self._cursor[shard_id] = None  # CLOSED + drained (O3)
         return dict(self._cursor)
@@ -1474,14 +1520,7 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
                 seq = rec["SequenceNumber"]
                 if seq > end:  # zero-padded: lexicographic == numeric
                     return
-                payload = json.loads(bytes(rec["Data"]).decode())
-                yield (
-                    self.stream,
-                    partition.shard_id,
-                    seq,
-                    rec["PartitionKey"],
-                    int(payload["k"]),
-                )
+                yield self._row(partition.shard_id, rec)
                 last_seq = seq
                 if seq == end:
                     return
@@ -1523,14 +1562,7 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
                     seq = rec["SequenceNumber"]
                     if seq > end:
                         return
-                    payload = json.loads(bytes(rec["Data"]).decode())
-                    yield (
-                        self.stream,
-                        partition.shard_id,
-                        seq,
-                        rec["PartitionKey"],
-                        int(payload["k"]),
-                    )
+                    yield self._row(partition.shard_id, rec)
                     progressed = True
                     if seq == end:
                         return
@@ -1577,6 +1609,48 @@ class KinesumerWireStreamReader(DataSourceStreamReader):
             ]
         )
         done.update(drained)
+
+
+class KinesumerWirePollingReader(SimpleDataSourceStreamReader):
+    """Polling mode through Spark's simple stream reader protocol: the
+    planner's tip probe is the read. ``read(start)`` runs one
+    ``advance`` round from Spark's offset and returns the round's
+    records as ONE Arrow batch with the new cursor; Spark moves the
+    batch into the driver's block manager, so a microbatch runs no
+    Python read task and each record crosses the wire once.
+    ``readBetweenOffsets`` is the cache miss — a WAL-logged batch
+    replayed after a restart — and reads the range on an executor
+    through the shard slices of ``KinesumerWireStreamReader``. Listing,
+    lineage gate, deletion freeze, Dynamo seeding, ownership filter
+    and the SHARD_END commit all stay in that one reader."""
+
+    def __init__(self, schema: StructType, options: dict) -> None:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self._reader = KinesumerWireStreamReader(schema, options)
+        self._arrow_schema = to_arrow_schema(schema)
+
+    def initialOffset(self) -> dict:
+        return self._reader.initialOffset()
+
+    def read(self, start: dict):
+        import pyarrow as pa
+
+        rows: list[tuple] = []
+        end = self._reader.advance(start, rows)
+        if not rows:
+            return iter(()), end
+        columns = [list(c) for c in zip(*rows)]
+        batch = pa.record_batch(columns, schema=self._arrow_schema)
+        return iter([batch]), end
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        r = self._reader
+        for part in r.partitions(start, end):
+            yield from r.read(part)
+
+    def commit(self, end: dict) -> None:
+        self._reader.commit(end)
 
 
 class _WirePutResult(WriterCommitMessage):
@@ -1680,7 +1754,17 @@ class KinesumerWireDataSource(DataSource):
         return _DDL
 
     def streamReader(self, schema: StructType) -> KinesumerWireStreamReader:
+        # polling has no partitioned reader: Spark then falls back to
+        # simpleStreamReader, whose probe round is the read
+        if self.options.get("mode", "polling") != "efo":
+            raise PySparkNotImplementedError(
+                errorClass="NOT_IMPLEMENTED",
+                messageParameters={"feature": "polling streamReader"},
+            )
         return KinesumerWireStreamReader(schema, self.options)
+
+    def simpleStreamReader(self, schema: StructType):
+        return KinesumerWirePollingReader(schema, self.options)
 
     def writer(self, schema: StructType, overwrite: bool):
         return KinesumerWirePutWriter(schema, self.options)

@@ -37,6 +37,7 @@ import json
 import os
 import socket
 import threading
+import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Callable
@@ -232,6 +233,10 @@ class ShardLineage:
 
 
 class Engine:
+    # how long close()/refresh() wait for the in-flight batch to commit
+    # before stopping the query anyway
+    _STOP_WAIT_S = 60.0
+
     def __init__(
         self,
         spark: SparkSession,
@@ -260,6 +265,14 @@ class Engine:
         self._progress: list[dict] = []
         self._listener = None
         self._lock = threading.Lock()
+        # close()/refresh() stop the query between batches: _in_batch
+        # marks a foreachBatch call in flight, _batch_done wakes the
+        # stopper, _delivered is the last batch id delivered, and
+        # _stopping keeps an interruption they cause off errors()
+        self._batch_done = threading.Condition(self._lock)
+        self._in_batch = False
+        self._delivered: int | None = None
+        self._stopping = False
         self._generation = 0
         # (stream, child_shard) → [(parent_shard, parent_end), ...];
         # populated by consume(lineage=...), empty = no reshard gating
@@ -834,6 +847,8 @@ class Engine:
 
         def deliver(batch_df: DataFrame, batch_id: int) -> None:
             arrived = batch_df  # the persisted handle (pre-admission)
+            with self._lock:
+                self._in_batch = True
             try:
                 arrived.persist()
                 if self._lineage:
@@ -841,7 +856,9 @@ class Engine:
                 try:
                     sink(batch_df, batch_id)
                 except Exception as exc:
-                    if self.commit_config.on_sink_error != "dlq":
+                    # a sink interrupted by a stop is not a poison pill
+                    dlq = self.commit_config.on_sink_error == "dlq"
+                    if not dlq or self._stopping:
                         raise
                     # poison-pill isolation: park the batch, keep flowing
                     with self._lock:
@@ -851,12 +868,20 @@ class Engine:
                     batch_df.write.mode("append").parquet(self._sink_dlq_dir())
                 if self.commit_config.auto:
                     self.commit(batch_df, batch_id)
+                self._delivered = batch_id
             except Exception as exc:  # error side-channel, non-blocking (O20)
+                # always re-raise, so the batch stays uncommitted and
+                # replays on restart; an interruption by close() or
+                # refresh() is not recorded as an error
                 with self._lock:
-                    self._errors.append(f"batch {batch_id}: {exc}")
+                    if not self._stopping:
+                        self._errors.append(f"batch {batch_id}: {exc}")
                 raise
             finally:
                 arrived.unpersist()
+                with self._lock:
+                    self._in_batch = False
+                    self._batch_done.notify_all()
 
         self._attach_listener()
         writer = (
@@ -892,9 +917,7 @@ class Engine:
     def refresh(self, sources: list[StreamSource]) -> DataFrame:
         """O18 Refresh: a Spark query's source set is fixed, so refresh is
         stop → new consume() (documented semantic gap, SURVEY.md §7)."""
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
+        self._stop_query()
         self._generation += 1
         return self.consume(sources)
 
@@ -950,12 +973,41 @@ class Engine:
         with self._lock:
             return list(self._progress)
 
-    def close(self) -> None:
-        """Graceful close: stop + final commit is already on disk because
-        commits are per-batch (stricter than the reference's 5 s flush)."""
-        if self._query is not None:
-            self._query.stop()
+    def _stop_query(self) -> None:
+        """Stop the query at a batch boundary: wait up to _STOP_WAIT_S
+        seconds for the in-flight foreachBatch call to finish and for
+        Spark to commit that batch (its progress report follows the
+        commit-log entry), then stop. A stop that still lands mid-batch
+        cancels the batch's jobs; deliver re-raises, so the batch stays
+        uncommitted and replays on restart, and the interruption is not
+        recorded in errors()."""
+        q = self._query
+        if q is None:
+            return
+        wait = self._STOP_WAIT_S
+        deadline = time.monotonic() + wait
+        with self._lock:
+            self._stopping = True
+            self._batch_done.wait_for(lambda: not self._in_batch, wait)
+            last = self._delivered
+        while last is not None and time.monotonic() < deadline:
+            p = q.lastProgress
+            if not q.isActive or (p is not None and p["batchId"] >= last):
+                break
+            time.sleep(0.01)
+        try:
+            q.stop()
+        finally:
             self._query = None
+            with self._lock:
+                self._stopping = False
+                self._delivered = None
+
+    def close(self) -> None:
+        """Graceful close: stop between batches (see _stop_query); the
+        final commit is already on disk because commits are per-batch
+        (stricter than the reference's 5 s flush)."""
+        self._stop_query()
         if self._listener is not None:
             try:
                 self.spark.streams.removeListener(self._listener)

@@ -1688,7 +1688,7 @@ def stream_kinesis_wire_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     speaking the public Kinesis JSON wire API
     (sources/kinesis_wire.py — ListShards / GetShardIterator /
     GetRecords with base64 blobs and X-Amz-Target routing), consumed by
-    genuine boto3/botocore clients inside Spark executors. Every round
+    genuine boto3/botocore clients in the Spark driver. Every round
     until now the live-source path was the one reference behavior that
     had never executed here (no localstack in the sandbox); this query
     closes the gap to the protocol level: shard discovery, iterator
@@ -1700,11 +1700,11 @@ def stream_kinesis_wire_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     range(); the n column proves exactly-once delivery across the
     paced microbatches.
 
-    Scale: one planner partition per shard per batch (the reference's
-    range-split assignment); the driver holds only the per-shard
-    cursor and a scanLimit-bounded tip probe; payloads flow through
-    executors only. Against AWS the same consumer changes one option
-    (the endpoint)."""
+    Scale: the scanLimit-bounded tip probe is the read — each record
+    crosses the wire once, on the driver, and enters the batch as one
+    Arrow batch; the driver holds the per-shard cursor and the records
+    of uncommitted batches. Against AWS the same consumer changes one
+    option (the endpoint)."""
     from kinesumer_spark.sources.kinesis_wire import (
         FakeKinesisServer,
         register_wire_source,
@@ -1844,7 +1844,7 @@ def stream_kinesis_wire_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the gate is planner-side admission control — O(#shards)
     driver state consulted when building each batch's offset range;
-    executors and payload volume are untouched. After a reshard storm
+    payload volume is untouched. After a reshard storm
     on a 1000-shard stream, only the blocked children idle, and each
     unblocks one planner round after its own parent drains."""
     import shutil
@@ -2094,9 +2094,9 @@ def stream_kinesis_wire_live_split(spark: SparkSession, sf_dir: str) -> DataFram
     as data.
 
     Scale: discovery is one ListShards per planning round (the
-    reference's sync cadence) — O(#shards) driver work; payloads and
-    placement hashing stay server/executor-side. A reshard storm on a
-    1000-shard stream adds cursor entries, never executor stalls."""
+    reference's sync cadence) — O(#shards) driver work; placement
+    hashing stays server-side. A reshard storm on a 1000-shard stream
+    adds cursor entries, never read stalls."""
     import json as _json
     import shutil
     import tempfile
@@ -2245,7 +2245,7 @@ def stream_kinesis_wire_live_merge(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: same O(#shards)-per-round driver cost as the split path; a
     scale-in wave on a 1000-shard stream shrinks the cursor map and
-    never stalls executors."""
+    never stalls reads."""
     import json as _json
     import shutil
     import tempfile
@@ -2482,11 +2482,10 @@ def stream_kinesis_wire_iterator_expiry(
 ) -> DataFrame:
     """Iterator-expiry fault injection over the wire: the endpoint
     raises ExpiredIteratorException on every 4th GetRecords — hitting
-    planner probes and executor page loops alike, wherever the counter
-    lands — and caps pages at 5 records so executor drains are
-    multi-page (expiry can strike MID-partition). botocore does not
-    retry this error (it is not a throttle); recovery is the
-    consumer's job, and both paths re-acquire from their last position
+    the planner's probe rounds, which are the polling read — and caps
+    pages at 5 records. botocore does not retry this error (it is not
+    a throttle); recovery is the consumer's job: the probe and the
+    executor's replay read both re-acquire from their last position
     (the reference's invalidate-and-restart, kinesumer.go:689-693).
     The oracle is the UNFAULTED feed: delivery must be byte-identical
     — exactly-once, per-shard ordered — no matter where the faults
@@ -2586,7 +2585,7 @@ def stream_kinesis_wire_paged_topology(
     of its first page.
 
     Scale: discovery is O(#shards / page) control calls per planning
-    round, driver-side only; executor work is unchanged."""
+    round, driver-side only; the read itself is unchanged."""
     import shutil
     import tempfile
 
@@ -3476,8 +3475,8 @@ def coordination_multiclient_handoff(
 
     Scale: per-client planner state is O(assigned shards); the handoff
     itself is one BatchGetItem. Adding clients never re-reads data —
-    ownership is a planner filter, and payload bytes move only
-    executor-side. At 1000 shards / 50 clients this is the same 20-row
+    ownership is a planner filter, and each client reads only its own
+    shards' payload bytes. At 1000 shards / 50 clients this is the same 20-row
     slice math the golden vectors pin."""
     import json as _json
     import shutil
@@ -3812,8 +3811,8 @@ def coordination_multiclient_lineage(
 
     Scale: the gate costs one 1-key BatchGetItem per planning round
     per in-flight foreign reshard (positives cached — drain is
-    sticky); payload bytes only ever move executor-side for the
-    owning client. Reference: kinesumer.go:314 (the open TODO this
+    sticky); payload bytes only ever move for the owning client.
+    Reference: kinesumer.go:314 (the open TODO this
     gate implements), syncclient.go:114-117 (range assignment)."""
     import json as _json
     import shutil

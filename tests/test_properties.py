@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from kinesumer_spark.streaming.assignment import full_assignment, split_shard_ids
 from kinesumer_spark.streaming.envelope import N_SHARDS
@@ -695,6 +695,11 @@ def test_cdc_is_shift_resistant(text, pos, ins):
         st.integers(min_value=1, max_value=10**7), min_size=1, max_size=12
     )
 )
+# thresholds derived from the floored target broke monotonicity on
+# both shapes (the 41-doc key kept 609 ppm less than the 40-doc key);
+# pinned so the check does not depend on Hypothesis finding them
+@example(counts=[46, 43, 41, 1, 40])
+@example(counts=[1, 1, 4, 6, 162597, 9999999, 10000000])
 def test_temperature_plan_invariants(counts):
     """The SHIPPED plan math (temperature_plan_cte, executed here in
     DuckDB over a synthetic per-key table), checked against a
@@ -723,7 +728,16 @@ def test_temperature_plan_invariants(counts):
         cums.append(cum)
     total_wt = max(cums)
     targets = [math.floor(total * x / total_wt) for x in wts]
-    thresholds = [min(d, t * d // n) for t, n in zip(targets, counts)]
+
+    def threshold(t, n, tot, x, tw):
+        # keep-all once the target reaches the count, else the
+        # unrounded rate tot / (tw·√n) scaled to D
+        return d if t >= n else min(d, math.floor(d * tot / (tw * x)))
+
+    thresholds = [
+        threshold(t, n, total, x, total_wt)
+        for t, n, x in zip(targets, counts, wts)
+    ]
     # execute the SHIPPED CTE over an expanded per-key table and demand
     # exact agreement with the mirror (keys k000, k001, ... sort in
     # index order, matching the mirror's ordered running sum)
@@ -751,7 +765,7 @@ def test_temperature_plan_invariants(counts):
         et = math.floor(etotal * w_ / etw)
         assert row[1] == c
         assert row[2] == et, (row, et)
-        assert row[3] == min(d, et * d // c), (row, et, c)
+        assert row[3] == threshold(et, c, etotal, w_, etw), (row, et, c)
     assert sum(targets) <= total
     assert all(0 <= t <= d for t in thresholds)
     for t, n, thr in zip(targets, counts, thresholds):

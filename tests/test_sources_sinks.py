@@ -2714,3 +2714,246 @@ def test_kinesis_wire_consume_spans_listshards_pages(spark):
             q.stop()
             q.awaitTermination()
     assert sorted(int(r.sequence_number) for r in rows) == list(range(30))
+
+
+def _count_dispatch(api) -> dict:
+    """Count API calls per operation at the endpoint's dispatch
+    boundary, plus how often GetRecords returned each sequence number.
+    Returns the live counters dict."""
+    import collections
+    import threading
+
+    counts = {"ops": collections.Counter(), "seqs": collections.Counter()}
+    lock = threading.Lock()
+    inner = api.dispatch
+
+    def dispatch(op, body):
+        out = inner(op, body)
+        with lock:
+            counts["ops"][op] += 1
+            if op == "GetRecords":
+                seqs = (r["SequenceNumber"] for r in out["Records"])
+                counts["seqs"].update(seqs)
+        return out
+
+    api.dispatch = dispatch
+    return counts
+
+
+def _simple_feed(n_shards: int, per_shard: int) -> list[tuple]:
+    """The (shard_id, sequence_number, partition_key, payload_k) rows of
+    ``simple_stream(_, n_shards, per_shard)``."""
+    return sorted(
+        (
+            f"shardId-{s:012d}",
+            str(s * per_shard + i).zfill(21),
+            str((s * per_shard + i) % 97),
+            ((s * per_shard + i) * 31 + s) % 1000,
+        )
+        for s in range(n_shards)
+        for i in range(per_shard)
+    )
+
+
+def _wire_rows(rows) -> list[tuple]:
+    return sorted(
+        (r["shard_id"], r["sequence_number"], r["partition_key"], r["payload_k"])
+        for r in rows
+    )
+
+
+def test_kinesis_wire_polling_fetches_each_record_once(spark):
+    """Polling mode reads on the driver, once: the planner's tip probe
+    is the read, so a drain through readStream takes every record off
+    the wire exactly once (the executor re-fetch of the probed range
+    doubled it) and runs no Python read task."""
+    from kinesumer_spark.sources.kinesis_wire import (
+        FakeKinesisServer,
+        register_wire_source,
+        simple_stream,
+    )
+
+    register_wire_source(spark)
+    rows = []
+
+    def capture(batch_df, batch_id):
+        rows.extend(batch_df.collect())
+
+    with FakeKinesisServer(simple_stream("wire", 3, 20)) as srv:
+        counts = _count_dispatch(srv.api)
+        q = (
+            spark.readStream.format("kinesumer_wire")
+            .option("endpoint", srv.url)
+            .option("stream", "wire")
+            .option("scanlimit", 8)
+            .load()
+            .writeStream.foreachBatch(capture)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+    assert _wire_rows(rows) == _simple_feed(3, 20)
+    assert len(counts["seqs"]) == 60
+    assert set(counts["seqs"].values()) == {1}
+    assert "SubscribeToShard" not in counts["ops"]
+
+
+def test_kinesis_wire_efo_reads_on_executors(spark):
+    """mode=efo keeps the partitioned reader: the probe only paces the
+    batch boundary and executors read the committed ranges through
+    SubscribeToShard, so GetRecords still returns each record once
+    (the probe) and the data arrives over the event streams."""
+    from kinesumer_spark.sources.kinesis_wire import (
+        FakeKinesisServer,
+        KinesumerWireDataSource,
+        KinesumerWireStreamReader,
+        register_efo_consumer,
+        register_wire_source,
+        simple_stream,
+        wire_client,
+    )
+
+    register_wire_source(spark)
+    rows = []
+
+    def capture(batch_df, batch_id):
+        rows.extend(batch_df.collect())
+
+    with FakeKinesisServer(simple_stream("wire", 3, 20)) as srv:
+        arn = register_efo_consumer(wire_client(srv.url), "wire", "t-efo-ex")
+        opts = {"endpoint": srv.url, "consumerarn": arn, "mode": "efo"}
+        assert isinstance(
+            KinesumerWireDataSource(opts).streamReader(None),
+            KinesumerWireStreamReader,
+        )
+        counts = _count_dispatch(srv.api)
+        q = (
+            spark.readStream.format("kinesumer_wire")
+            .option("endpoint", srv.url)
+            .option("stream", "wire")
+            .option("scanlimit", 8)
+            .option("mode", "efo")
+            .option("consumerarn", arn)
+            .load()
+            .writeStream.foreachBatch(capture)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+    assert _wire_rows(rows) == _simple_feed(3, 20)
+    # every shard range of every batch is one subscription
+    assert counts["ops"]["SubscribeToShard"] >= 3
+    assert set(counts["seqs"].values()) == {1}
+
+
+def test_kinesis_wire_failed_batch_replays_wal_range(spark, tmp_path):
+    """A batch whose sink raises kills the query; the restarted query
+    on the same checkpoint has no prefetched records for that
+    WAL-logged batch (the cache miss) and re-reads its range on an
+    executor through readBetweenOffsets. With a batch-id-idempotent
+    sink every (shard_id, sequence_number) is delivered exactly once,
+    and the replayed batch is the one that failed, row for row."""
+    from kinesumer_spark.sources.kinesis_wire import (
+        FakeKinesisServer,
+        register_wire_source,
+        simple_stream,
+    )
+
+    register_wire_source(spark)
+    ck = str(tmp_path / "ck")
+    out: dict[int, list[tuple]] = {}
+    failed: dict[int, list[tuple]] = {}
+
+    def sink(batch_df, batch_id):
+        rows = _wire_rows(batch_df.collect())
+        if batch_id == 1 and not failed:
+            failed[batch_id] = rows
+            raise RuntimeError("sink down once")
+        out[batch_id] = rows  # idempotent by batch id
+
+    def run_once(srv):
+        q = (
+            spark.readStream.format("kinesumer_wire")
+            .option("endpoint", srv.url)
+            .option("stream", "wire")
+            .option("scanlimit", 6)
+            .load()
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ck)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+
+    with FakeKinesisServer(simple_stream("wire", 2, 15)) as srv:
+        counts = _count_dispatch(srv.api)
+        with pytest.raises(Exception, match="sink down once"):
+            run_once(srv)
+        assert set(counts["seqs"].values()) == {1}  # no replay yet
+        run_once(srv)
+    assert failed[1] and out[1] == failed[1]
+    delivered = [(r[0], r[1]) for rows in out.values() for r in rows]
+    assert len(delivered) == len(set(delivered))
+    got = sorted(r for rows in out.values() for r in rows)
+    assert got == _simple_feed(2, 15)
+    # the replay fetched the failed batch's records a second time
+    assert all(counts["seqs"][r[1]] >= 2 for r in failed[1])
+
+
+def test_kinesis_wire_polling_read_drops_partial_round_on_deletion():
+    """The polling read's freeze: a deletion landing mid-round returns
+    the pre-round offset with NO rows — the records the round had
+    already fetched from the first shard are dropped, not promised
+    under an offset that never advanced."""
+    import json as _json
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from kinesumer_spark.sources.kinesis_wire import (
+        FakeKinesisServer,
+        KinesumerWirePollingReader,
+        simple_stream,
+        wire_client,
+    )
+
+    schema = StructType(
+        [
+            StructField(c, StringType())
+            for c in ("stream", "shard_id", "sequence_number", "partition_key")
+        ]
+        + [StructField("payload_k", LongType())]
+    )
+    with FakeKinesisServer(simple_stream("wire", 2, 10)) as srv:
+        r = KinesumerWirePollingReader(
+            schema, {"endpoint": srv.url, "stream": "wire", "scanlimit": 100}
+        )
+        rows, settled = r.read(r.initialOffset())
+        (batch,) = list(rows)
+        assert batch.num_rows == 20
+        wire_client(srv.url).put_records(
+            StreamName="wire",
+            Records=[
+                {"Data": _json.dumps({"k": i}).encode(), "PartitionKey": f"k{i}"}
+                for i in range(10)
+            ],
+        )
+        real = srv.api.op_GetRecords
+
+        def delete_after_first(body):
+            out = real(body)
+            srv.api.stream_status["wire"] = "DELETING"
+            return out
+
+        srv.api.op_GetRecords = delete_after_first
+        rows, frozen = r.read(settled)
+        assert frozen == settled
+        assert list(rows) == []

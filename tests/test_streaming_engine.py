@@ -168,6 +168,76 @@ def test_error_side_channel(spark, tmp_path, events_dir):
     assert errs and "sink exploded" in errs[0]
 
 
+def test_close_mid_stream_is_not_an_error(spark, tmp_path, events_dir):
+    """close() with a batch in flight: it stops at the batch boundary;
+    a stop that still lands mid-batch (no wait) cancels the batch's
+    job, which deliver re-raises so the batch stays uncommitted.
+    Neither shows up in errors(), and a restart on the same checkpoint
+    delivers the interrupted batch once."""
+    import threading
+    import time
+
+    path, n_total = events_dir
+    ck = str(tmp_path / "ck")
+    done: dict[int, list[str]] = {}  # idempotent by batch id
+
+    slowed: list[int] = []  # ids of the batches given a slow sink
+
+    def run(slow=None):
+        started = threading.Event()
+        eng = Engine(spark, app="t-close", checkpoint_root=ck)
+
+        def sink(batch_df, batch_id):
+            if slow is not None and not started.is_set():
+                slowed.append(batch_id)
+                started.set()
+                batch_df = slow(batch_df)
+            done[batch_id] = [
+                r["sequence_number"]
+                for r in batch_df.select("sequence_number").collect()
+            ]
+
+        src = StreamSource("events", path, max_files_per_trigger=1)
+        q = eng.run(eng.consume([src]), sink)
+        return eng, q, started
+
+    def python_pause(df):
+        time.sleep(1.5)
+        return df
+
+    def slow_job(df):
+        def crawl(batches):
+            for b in batches:
+                for _ in range(300):
+                    time.sleep(0.1)
+                yield b
+
+        return df.mapInPandas(crawl, df.schema)
+
+    eng, _, started = run(python_pause)
+    assert started.wait(120)
+    eng.close()  # waits for the paused batch
+    assert eng.errors() == []
+    assert slowed[0] in done
+
+    eng, _, started = run(slow_job)
+    assert started.wait(120)
+    time.sleep(1.0)  # the batch's job is running
+    eng._STOP_WAIT_S = 0  # stop without waiting: lands mid-batch
+    eng.close()
+    assert eng.errors() == []
+    interrupted = slowed[1]
+    assert interrupted not in done
+
+    eng, q, _ = run()
+    q.processAllAvailable()
+    eng.close()
+    assert eng.errors() == []
+    assert interrupted in done
+    delivered = [s for seqs in done.values() for s in seqs]
+    assert len(delivered) == len(set(delivered)) == n_total
+
+
 def test_manual_commit_mode(spark, tmp_path, events_dir):
     """commit.auto=False → nothing in the ledger unless the sink commits
     (CommitConfig parity, kinesumer.go:77-95)."""
